@@ -4595,9 +4595,9 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV ingest surface inside the correctness gate: writetable →
-    readtable with explicit schema (reference readtable/writetable,
-    src/io.jl:596-791) must round-trip nation bit-for-bit vs the
-    parquet-sourced oracle."""
+    readtable with its inferred schema (reference readtable/writetable,
+    src/io.jl:596-791), then casts of the key columns back to int, must
+    round-trip nation bit-for-bit vs the parquet-sourced oracle."""
     import tempfile
 
     from .io.readtable import readtable, writetable
@@ -13347,16 +13347,6 @@ def q_multimodal_pgm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _netpbm_gate(
         synth_decode_features(ids, "pgm", "media_id", width=8, height=6)
-    )
-    feats = decode_images(imgs, "payload", "media_id", fake=False)
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        "channels",
-        (F.floor(F.col("mean_luma") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "mean_luma"
-        ),
     )
 
 

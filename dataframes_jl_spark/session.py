@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .io.parquet import load_df
+
 _DEFAULTS: dict[str, str] = {
     # Adaptive query execution: runtime re-planning, skew-join splitting,
     # partition coalescing — essential at scale, harmless locally.
@@ -105,6 +107,12 @@ TPCH_TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Load one driver-generated parquet table, normalizing types.
 
+    Reads through :func:`io.parquet.load_df`, so the first load of a file
+    in a process infers its schema (one Spark job) and every later load of
+    the unchanged file runs no job. The confs set below for ``events`` are
+    part of that cache's stamp, so setting them on a vanilla session
+    re-infers rather than reusing a schema inferred without them.
+
     ``events.ts`` arrives as long nanoseconds (see nanosAsLong conf) and is
     converted to a microsecond timestamp — lossless for this data, and the
     conversion stays inside whole-stage codegen.
@@ -121,7 +129,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             spark.conf.set("spark.sql.session.timeZone", "UTC")
         except Exception:
             pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = load_df(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql import functions as F
 

@@ -69,10 +69,11 @@ def openstream(
     spark: SparkSession, path: str, nrows: int = 1000, **read_kwargs
 ) -> DataStream:
     """openstream(filename; nrows) (reference src/datastream.jl:23-54)."""
+    from ..io.parquet import load_df
     from ..io.readtable import readtable
 
     if path.endswith(".parquet"):
-        df = spark.read.parquet(path)
+        df = load_df(spark, path)
     else:
         df = readtable(spark, path, **read_kwargs)
     return DataStream(df, nrows)

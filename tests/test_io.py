@@ -8,6 +8,7 @@ import gzip
 import os
 
 import pytest
+from conftest import SF_DIR_ORACLE
 
 from dataframes_jl_spark.io import getseparator, readtable, writetable
 from dataframes_jl_spark.io.parquet import load_df, save
@@ -409,3 +410,121 @@ def test_zorder_rejects_string_accepts_temporal(spark):
         F.countDistinct("__zorder__").alias("distinct"),
     ).collect()[0]
     assert row.nulls == 0 and row.distinct > 1
+
+
+# --- the Parquet read path (io.parquet.load_df) ------------------------------
+
+
+def _jobs_run_by(spark, fn):
+    """(number of Spark jobs ``fn()`` launched, its result), counted by
+    the status tracker under a fresh job group. A sentinel job in a
+    second group flushes the listener bus first: job events arrive in
+    order, so once the sentinel is visible every job ``fn`` started is."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-path-{uuid.uuid4().hex}"
+    sentinel = f"{group}-sentinel"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(sentinel, sentinel)
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 60
+        while not sc.statusTracker().getJobIdsForGroup(sentinel):
+            assert time.monotonic() < deadline, "sentinel job never reported"
+            time.sleep(0.05)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_second_load_runs_no_spark_job(spark, tmp_path):
+    """Schema inference runs once per file: the first load of a file
+    launches the footer job, every later load of the unchanged file
+    launches none (load_table goes through the same path)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataframes_jl_spark.session import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    first, _ = _jobs_run_by(spark, lambda: load_df(spark, path))
+    assert first >= 1  # the counter sees the inference job
+    again, df = _jobs_run_by(spark, lambda: load_df(spark, path))
+    assert again == 0 and sorted(r.a for r in df.collect()) == [1, 2, 3]
+
+    def orders():
+        return load_table(spark, SF_DIR_ORACLE, "orders")
+
+    orders()
+    n, df = _jobs_run_by(spark, orders)
+    assert n == 0 and "o_orderkey" in df.columns
+
+
+def test_cached_schema_reads_match_plain_reads(spark):
+    """All ten tables: the schema-cached read returns the schema and rows
+    of a plain spark.read.parquet (events after load_table's ts
+    normalization), and each load is a fresh relation, so a self-join
+    of two loads resolves."""
+    from pyspark.sql import functions as F
+
+    from dataframes_jl_spark.session import TPCH_TABLES, load_table
+
+    for name in TPCH_TABLES:
+        load_table(spark, SF_DIR_ORACLE, name)
+        got = load_table(spark, SF_DIR_ORACLE, name)
+        ref = spark.read.parquet(f"{SF_DIR_ORACLE}/{name}.parquet")
+        if name == "events":
+            assert dict(ref.dtypes)["ts"] == "timestamp_ntz"
+            ref = ref.withColumn("ts", F.col("ts").cast("timestamp"))
+        assert got.schema == ref.schema, name
+        assert got.exceptAll(ref).isEmpty() and ref.exceptAll(got).isEmpty(), name
+
+    a = load_table(spark, SF_DIR_ORACLE, "nation")
+    b = load_table(spark, SF_DIR_ORACLE, "nation")
+    pairs = a.join(b, a["n_regionkey"] == b["n_regionkey"]).count()
+    per_region = [r[1] for r in a.groupBy("n_regionkey").count().collect()]
+    assert pairs == sum(c * c for c in per_region)
+
+
+def test_rewritten_file_is_reinferred(spark, tmp_path):
+    """A file rewritten at the same path with another schema changes its
+    stamp, so the next load infers again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    load_df(spark, path)
+    assert load_df(spark, path).dtypes == [("a", "bigint")]
+    pq.write_table(pa.table({"a": ["x", "y", "z"], "b": [0.5, 1.5, 2.5]}), path)
+    df = load_df(spark, path)
+    assert df.dtypes == [("a", "string"), ("b", "double")]
+    assert sorted(r.a for r in df.collect()) == ["x", "y", "z"]
+
+
+def test_inference_conf_flip_reinfers(spark, tmp_path):
+    """The session's inference confs are part of the stamp: flipping
+    spark.sql.parquet.binaryAsString re-infers a binary column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"ab", b"cd"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        load_df(spark, path)
+        assert load_df(spark, path).dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        df = load_df(spark, path)
+        assert df.dtypes == [("b", "string")]
+        assert sorted(r.b for r in df.collect()) == ["ab", "cd"]
+    finally:
+        spark.conf.set(key, before)

@@ -854,3 +854,37 @@ def test_kmv_overlap_releases_its_caches(spark):
     assert after <= before, (
         f"kmv_overlap left {after - before} net new persisted blocks behind"
     )
+
+
+@pytest.mark.parametrize("query", ["q_kaplan_meier", "q_hodges_lehmann"])
+def test_builder_job_queries_are_partition_invariant(spark, query):
+    """The two relational queries that run Spark jobs while building
+    (with_running's eager carry collects, the persisted per-value
+    tables) return the same rows under 1, 3 and 7 shuffle partitions,
+    with AQE allowed to re-coalesce cached plans and without. This is
+    the invariant the session's
+    canChangeCachedPlanOutputPartitioning=true rests on."""
+    import hashlib
+
+    from conftest import SF_DIR_ORACLE
+
+    from dataframes_jl_spark.queries import QUERIES
+
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning")
+    before = {k: spark.conf.get(k) for k in keys}
+    hashes = {}
+    try:
+        for parts in (1, 3, 7):
+            for recoalesce in ("true", "false"):
+                spark.conf.set(keys[0], str(parts))
+                spark.conf.set(keys[1], recoalesce)
+                spark.catalog.clearCache()
+                out = QUERIES[query](spark, SF_DIR_ORACLE).collect()
+                digest = hashlib.sha256(repr(sorted(map(tuple, out))).encode())
+                hashes[(parts, recoalesce)] = digest.hexdigest()
+    finally:
+        spark.catalog.clearCache()
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert len(set(hashes.values())) == 1, hashes
